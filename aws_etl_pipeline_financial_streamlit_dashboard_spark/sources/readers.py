@@ -22,7 +22,9 @@ from aws_etl_pipeline_financial_streamlit_dashboard_spark.schemas import TESTDAT
 # schema inference + py4j round trips) costs ~0.1 s per call; a
 # metastore-backed engine resolves each table once and reuses the
 # relation, so this reader does too. DataFrames are immutable plan
-# objects — reuse across queries is safe. Keyed by the SparkSession
+# objects — reuse across queries is safe until the table's files are
+# rewritten, so the overwrite sinks drop the entries of the path they
+# wrote (forget_path). Keyed by the SparkSession
 # OBJECT (not applicationId): a DataFrame belongs to the session that
 # built it — under an applicationId key a second session
 # (spark.newSession()) would receive another session's DataFrames,
@@ -100,6 +102,20 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             )
     per_session[key] = df
     return df
+
+
+def forget_path(path: str) -> None:
+    """Drop the cached relations of every table stored at or under
+    ``path``. A cached relation lists its part files once, so after a
+    sink rewrites them it would keep reading deleted files; the
+    overwrite sinks call this, and the next ``read_table`` resolves the
+    table anew."""
+    root = os.path.abspath(path)
+    for per_session in list(_TABLE_CACHE.values()):
+        for key in list(per_session):
+            table = os.path.abspath(os.path.join(key[0], f"{key[1]}.parquet"))
+            if os.path.commonpath([root, table]) == root:
+                per_session.pop(key, None)
 
 
 def load_testdata(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

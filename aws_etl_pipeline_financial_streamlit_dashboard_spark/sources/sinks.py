@@ -6,6 +6,10 @@ with ``if_exists="replace"`` (TableTransform.py:26-29). Spark-first:
 ``mode("overwrite")`` gives idempotent delete-then-write natively, part
 files and ``_SUCCESS`` markers are automatic, and the JDBC writer
 distributes the load across executors instead of one driver connection.
+
+Every file sink that overwrites drops the reader's cached relations of
+the path it wrote (``readers.forget_path``); Spark itself refreshes the
+cached plans that read the path (``CacheManager.recacheByPath``).
 """
 
 from __future__ import annotations
@@ -14,6 +18,8 @@ import datetime as _dt
 import os
 
 from pyspark.sql import DataFrame
+
+from aws_etl_pipeline_financial_streamlit_dashboard_spark.sources.readers import forget_path
 
 
 def write_parquet_overwrite(
@@ -35,6 +41,7 @@ def write_parquet_overwrite(
     if max_records_per_file:
         writer = writer.option("maxRecordsPerFile", str(max_records_per_file))
     writer.parquet(path)
+    forget_path(path)
 
 
 def write_orc_overwrite(
@@ -52,6 +59,7 @@ def write_orc_overwrite(
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.orc(path)
+    forget_path(path)
 
 
 def write_jdbc_overwrite(
@@ -107,3 +115,4 @@ def upsert_partitions(
         .partitionBy(*partition_by)
         .parquet(path)
     )
+    forget_path(path)

@@ -1,6 +1,7 @@
 """Round-5 boundary behaviors: NTZ enforcement at read_table, the
 legacy nanos fallback's timezone invariance, read_jdbc argument
-validation, and the table-cache session bound."""
+validation, the table-cache session bound, and the table cache's
+invalidation by the overwrite sinks."""
 
 from __future__ import annotations
 
@@ -14,6 +15,10 @@ from aws_etl_pipeline_financial_streamlit_dashboard_spark.sources.readers import
     _TABLE_CACHE_SESSIONS,
     read_jdbc,
     read_table,
+)
+from aws_etl_pipeline_financial_streamlit_dashboard_spark.sources.sinks import (
+    upsert_partitions,
+    write_parquet_overwrite,
 )
 
 
@@ -88,3 +93,27 @@ def test_table_cache_bounds_session_count(spark, sf_dir):
         df = read_table(s, sf_dir, "nation")
         assert df.count() > 0
     assert len(_TABLE_CACHE) <= _TABLE_CACHE_SESSIONS
+
+
+def test_read_table_sees_overwritten_table(spark, tmp_path):
+    """A relation cached by read_table lists the table's part files once;
+    after write_parquet_overwrite replaces them, read_table must resolve
+    the table anew instead of failing on the deleted files."""
+    d = str(tmp_path)
+    path = os.path.join(d, "t.parquet")
+    write_parquet_overwrite(spark.range(3), path)
+    assert read_table(spark, d, "t").count() == 3
+    write_parquet_overwrite(spark.range(5), path)
+    assert read_table(spark, d, "t").count() == 5
+
+
+def test_read_table_sees_upserted_partitions(spark, tmp_path):
+    """The partition upsert rewrites files under the table's directory:
+    the cached relation of the table must be dropped too."""
+    d = str(tmp_path)
+    path = os.path.join(d, "t.parquet")
+    upsert_partitions(spark.range(4).selectExpr("id", "id % 2 AS p"), path, ["p"])
+    assert read_table(spark, d, "t").count() == 4
+    upsert_partitions(spark.range(3).selectExpr("id", "0 AS p"), path, ["p"])
+    # partition p=0 now holds 3 rows, p=1 keeps its 2
+    assert read_table(spark, d, "t").count() == 5

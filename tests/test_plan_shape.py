@@ -9,10 +9,19 @@ shuffle counts for the canonical query shapes.
 
 from __future__ import annotations
 
+import os
+
+import pytest
 from pyspark.sql import functions as F
 
+from aws_etl_pipeline_financial_streamlit_dashboard_spark.plans import dashboard
 from aws_etl_pipeline_financial_streamlit_dashboard_spark.plans.catalog import QUERIES
+from aws_etl_pipeline_financial_streamlit_dashboard_spark.plans.cleaning import run_transform
 from aws_etl_pipeline_financial_streamlit_dashboard_spark.sources.readers import read_table
+from aws_etl_pipeline_financial_streamlit_dashboard_spark.sources.sinks import (
+    write_parquet_overwrite,
+)
+from tests.fixtures import raw_financials, raw_info, raw_stock
 
 
 def _plan(df) -> str:
@@ -262,3 +271,76 @@ def test_q86_two_fact_exchanges(spark, sf_dir):
     # lineitem appears in the plan exactly twice (lo + its rollup fork),
     # never a third self-join for the NOT EXISTS
     assert plan.count("lineitem") <= 2
+
+
+# ------------------------------------------------------------ dashboard
+
+
+def _nodes_outside_cache(df) -> list[tuple[str, list[str]]]:
+    """(node, names of every node below it) for each node of df's
+    executed plan, through AQE's stages but not into cached relations:
+    an InMemoryTableScan is a leaf here, its cached plan is not walked."""
+    out = []
+
+    def walk(p) -> list[str]:
+        if p.nodeName() == "AdaptiveSparkPlan":
+            return walk(p.executedPlan())
+        if p.getClass().getSimpleName().endswith("QueryStageExec"):
+            return walk(p.plan())
+        kids = p.children()
+        below: list[str] = []
+        for i in range(kids.size()):
+            below += walk(kids.apply(i))
+        name = p.simpleString(25)
+        out.append((name, below))
+        return [name] + below
+
+    walk(df._jdf.queryExecution().executedPlan())
+    return out
+
+
+@pytest.fixture(scope="module")
+def served_tables(spark, tmp_path_factory):
+    d = str(tmp_path_factory.mktemp("dashboard_serving"))
+    tables = run_transform(raw_info(spark), raw_stock(spark), raw_financials(spark))
+    for name, df in tables.items():
+        write_parquet_overwrite(df, os.path.join(d, f"{name}.parquet"))
+    return {name: read_table(spark, d, name) for name in tables}
+
+
+def _served_plan(df) -> list[tuple[str, list[str]]]:
+    df.collect()  # AQE finalizes lazily; inspect the final plan
+    return _nodes_outside_cache(df)
+
+
+def test_industry_results_read_cached_rollups(served_tables):
+    """After a first request, the industry results read their rollup
+    through InMemoryTableScan, and no hash exchange is left outside the
+    cached subtree: a request joins and aggregates no base table."""
+    t = served_tables
+    ci, fs, ra, sp = t["company_info"], t["financial_statements"], t["ratios"], t["stock_price"]
+    dashboard.industry_price_series(ci, sp, "AAA").collect()
+    dashboard.comparison_table(ci, fs, ra, "AAA").collect()
+    for df in (
+        dashboard.industry_price_series(ci, sp, "BBB"),
+        dashboard.comparison_table(ci, fs, ra, "BBB"),
+    ):
+        names = [n for n, _ in _served_plan(df)]
+        assert any(n.startswith("InMemoryTableScan") for n in names)
+        assert not [n for n in names if n.startswith("Exchange hashpartitioning")]
+        assert not [n for n in names if n.startswith("HashAggregate")]
+
+
+def test_industry_price_series_sorts_without_exchange(served_tables):
+    """The month sort runs over the single-partition rollup: outside the
+    cached subtree, the only exchange below the Sort is the target row's
+    limit inside the broadcast of the ticker's industry."""
+    t = served_tables
+    dashboard.industry_price_series(t["company_info"], t["stock_price"], "AAA").collect()
+    df = dashboard.industry_price_series(t["company_info"], t["stock_price"], "CCC")
+    nodes = _served_plan(df)
+    in_broadcast = {m for n, below in nodes if n.startswith("BroadcastExchange") for m in below}
+    sorts = [below for n, below in nodes if n.startswith("Sort ")]
+    assert len(sorts) == 1
+    assert any(n.startswith("InMemoryTableScan") for n in sorts[0])
+    assert [n for n in sorts[0] if n.startswith("Exchange") and n not in in_broadcast] == []
